@@ -97,9 +97,21 @@ final class MultiSourceAdEtl(val config: EtlConfig) {
   /** UNION ALL of the conformed frames (`multi_source_ad_etl.py:202-205`).
     * Name-based union: schemas are identical post-standardize by
     * construction, but `unionByName` keeps it robust to column order.
+    *
+    * The unions pair up level by level rather than left-deep: every
+    * `unionByName` analyzes the plan built so far, so a left-deep chain
+    * costs quadratic analysis time in the file count and a balanced tree
+    * n log n. The optimizer flattens either shape into one `Union` whose
+    * children are in file order.
     */
-  def merge(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_.unionByName(_))
+  def merge(dfs: Seq[DataFrame]): DataFrame = {
+    require(dfs.nonEmpty, "merge needs at least one frame")
+    @annotation.tailrec
+    def pairUp(level: Seq[DataFrame]): DataFrame =
+      if (level.size == 1) level.head
+      else pairUp(level.grouped(2).map(_.reduce(_.unionByName(_))).toSeq)
+    pairUp(dfs)
+  }
 
   /** Full pipeline over a directory of raw exports. */
   def run(spark: SparkSession, rawDir: String, capitalize: Boolean = false): DataFrame = {

@@ -10,9 +10,15 @@ import graft.util.A1
 /** The reference's script lifecycle (`scripts/apsl_internal.py:138-192`) as
   * one reusable driver: run the conformance pipeline, derive the
   * date-range filename, export to a BOM CSV and to each configured sheet
-  * (clear range → serial-dated upload). Laziness note: the pipeline plan
-  * executes once per sink action; `orderBy` keys make collected row order
-  * deterministic where the reference relied on eager concat order.
+  * (clear range → serial-dated upload).
+  *
+  * One sort, one cache: the merged plan is sorted once by `orderBy` and the
+  * SORTED result is persisted. The row count and the filename come from one
+  * aggregation over that cache, and the CSV write and the sheet collect read
+  * it in partition order without sorting again, so every sink sees the same
+  * rows in the same sequence, ties included. `orderBy` keys make the
+  * exported row order deterministic where the reference relied on eager
+  * concat order.
   */
 object PipelineRunner {
 
@@ -30,24 +36,24 @@ object PipelineRunner {
       orderBy: Seq[Column],
       svc: Sinks.SheetService,
       sheets: Seq[SheetTarget]): ExportResult = {
-    // persist before the first action: the filename agg, CSV write, each
-    // sheet collect, and the row count are separate actions — uncached they
-    // would re-read and re-clean the raw dir per action, and a file landing
-    // mid-run would make filename/CSV/sheet reflect different data
-    val merged = new MultiSourceAdEtl(config).run(spark, rawDir, capitalize).persist()
+    // persist before the first action: the count/filename agg, the CSV
+    // write and the sheet collect are separate actions — uncached they would
+    // re-read, re-clean and re-sort the raw dir per action, and a file
+    // landing mid-run would make filename/CSV/sheet reflect different data
+    val merged = new MultiSourceAdEtl(config).run(spark, rawDir, capitalize)
+    val sorted = (if (orderBy.nonEmpty) merged.orderBy(orderBy: _*) else merged).persist()
     try {
-      val rowCount = merged.count()
+      val (rowCount, fileName) = A1.countAndDateFilename(filenamePrefix, sorted)
       if (rowCount == 0) throw new IllegalStateException(
         s"Pipeline produced 0 rows from $rawDir — refusing to export an empty artifact")
-      val fileName = A1.makeDateFilename(filenamePrefix, merged)
       val csvPath = Paths.get(processedDir, fileName).toString
-      Sinks.writeCsvWithBom(merged, csvPath, orderBy)
+      Sinks.writeCsvWithBom(sorted, csvPath)
       if (sheets.nonEmpty) {
-        // one sorted serial-dated collect, fanned out to every sheet target
-        val (header, rows) = Sinks.collectSheetPayload(merged, orderBy)
+        // one serial-dated collect, fanned out to every sheet target
+        val (header, rows) = Sinks.collectSheetPayload(sorted, Nil)
         sheets.foreach(t => Sinks.uploadPayload(svc, header, rows, t.sheetKey, t.sheetName))
       }
       ExportResult(csvPath, rowCount, sheets)
-    } finally merged.unpersist()
+    } finally sorted.unpersist()
   }
 }

@@ -1,7 +1,11 @@
 package graft.io
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.UUID
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors}
+
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -15,24 +19,79 @@ object Sources {
     * (a multi-file `spark.read.csv(dir)` would union the schemas and break
     * detection). Ref `multi_source_ad_etl.py:96-108`. `.xlsx` dispatches to
     * the JDK-only [[Xlsx]] reader (reference S2).
+    *
+    * Concurrency: the reads — a CSV's schema-inference jobs, an XLSX's
+    * driver-side decode — run on a fixed pool of min(files,
+    * `defaultParallelism`) threads. The pool is created per call, so its
+    * threads inherit the caller's Spark local properties (job group, tags,
+    * scheduler pool), and it is shut down before the call returns.
+    *
+    * Order: the frames come back in file-name order, whatever order the
+    * reads finish in.
+    *
+    * Errors: a read that throws surfaces as one IllegalArgumentException
+    * naming the file, with the read's exception as its cause. The reported
+    * file is the first failing one in file-name order; the other reads are
+    * cancelled.
     */
   def readTabularFiles(spark: SparkSession, rawDir: String): Seq[DataFrame] = {
     val dir = Paths.get(rawDir)
     require(Files.isDirectory(dir), s"Not a directory: $rawDir")
     val files = scala.util.Using.resource(Files.list(dir))(
       _.iterator().asScala.toSeq.sortBy(_.getFileName.toString))
-    val dfs = files.flatMap { f =>
+    val reads = files.flatMap { f =>
       f.getFileName.toString.toLowerCase match {
-        case n if n.endsWith(".csv")  => Some(readCsv(spark, f))
-        case n if n.endsWith(".xlsx") => Some(Xlsx.read(spark, f))
+        case n if n.endsWith(".csv")  => Some(f -> (() => readCsv(spark, f)))
+        case n if n.endsWith(".xlsx") => Some(f -> (() => Xlsx.read(spark, f)))
         case _ => None
       }
     }
-    if (dfs.isEmpty)
+    if (reads.isEmpty)
       throw new IllegalArgumentException(
         s"No CSV or XLSX found in directory: $rawDir. File(s) present: " +
           (if (files.isEmpty) "None" else files.map(_.getFileName).mkString(", ")))
-    dfs
+    readConcurrently(spark, reads)
+  }
+
+  /** Name prefix of the threads [[readTabularFiles]] reads on. */
+  private[io] val ReadThreadPrefix = "graft-read-"
+
+  /** Run `reads` on a pool created for this call; see [[readTabularFiles]]. */
+  private def readConcurrently(spark: SparkSession, reads: Seq[(Path, () => DataFrame)]): Seq[DataFrame] = {
+    val sc = spark.sparkContext
+    // tags the reads' Spark jobs, so a failure can cancel the ones in flight
+    val tag = s"graft-read-job-${UUID.randomUUID()}"
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(math.min(reads.size, sc.defaultParallelism), { (r: Runnable) =>
+      val t = new Thread(r, s"$ReadThreadPrefix${threads.size}")
+      t.setDaemon(true)
+      threads.add(t)
+      t
+    })
+    try {
+      val pending = reads.map { case (f, read) =>
+        f -> pool.submit(new Callable[DataFrame] {
+          def call(): DataFrame = { sc.addJobTag(tag); read() }
+        })
+      }
+      pending.map { case (f, future) =>
+        try future.get()
+        catch {
+          case e: ExecutionException =>
+            pending.foreach(_._2.cancel(true))
+            sc.cancelJobsWithTag(tag)
+            e.getCause match {
+              case NonFatal(cause) => throw new IllegalArgumentException(
+                s"Failed to read $f: ${cause.getClass.getName}: ${cause.getMessage}", cause)
+              case fatal => throw fatal
+            }
+        }
+      }
+    } finally {
+      pool.shutdownNow()
+      // joined, not just awaited: no pool thread outlives the call
+      threads.forEach(_.join())
+    }
   }
 
   /** One CSV file, header row, full-file schema inference — the Spark

@@ -1,12 +1,13 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, date_format, max, min}
+import org.apache.spark.sql.functions.{col, count, date_format, lit, max, min}
 import org.apache.spark.sql.types.DateType
 
 /** Spreadsheet A1-range math and date-range filenames (reference M4–M6,
-  * `utils.py:6-60`). Pure driver-side utilities; the only Spark action is
-  * the single min/max aggregation in [[makeDateFilename]].
+  * `utils.py:6-60`). Pure driver-side utilities; the only Spark actions are
+  * [[dfRange]]'s count and the single count/min/max aggregation behind
+  * [[makeDateFilename]].
   */
 object A1 {
 
@@ -78,12 +79,20 @@ object A1 {
     * the FIRST DateType column; errors when none exists (`utils.py:17-21`).
     * One job computes both bounds (the reference runs two full passes).
     */
-  def makeDateFilename(prefix: String, df: DataFrame): String = {
+  def makeDateFilename(prefix: String, df: DataFrame): String =
+    countAndDateFilename(prefix, df)._2
+
+  /** `(rowCount, fileName)` from ONE aggregation: `count` plus the
+    * `min`/`max` of the first DateType column that [[makeDateFilename]]
+    * names the file after — an export needs both, and one job serves both.
+    */
+  def countAndDateFilename(prefix: String, df: DataFrame): (Long, String) = {
     val dateCol = df.schema.fields.collectFirst { case f if f.dataType == DateType => f.name }
       .getOrElse(throw new IllegalArgumentException(s"Date col not found in schema ${df.schema.simpleString}"))
     val row = df.agg(
+      count(lit(1)),
       date_format(min(col(s"`$dateCol`")), "yyyy-MM-dd"),
       date_format(max(col(s"`$dateCol`")), "yyyy-MM-dd")).head()
-    s"${prefix}_${row.getString(0)}–${row.getString(1)}.csv"
+    (row.getLong(0), s"${prefix}_${row.getString(1)}–${row.getString(2)}.csv")
   }
 }

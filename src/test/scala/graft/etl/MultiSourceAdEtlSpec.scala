@@ -162,4 +162,17 @@ class MultiSourceAdEtlSpec extends SparkSpec {
     assert(e.getMessage.contains("No CSV or XLSX"))
     assert(e.getMessage.contains("notes.txt"))
   }
+
+  test("merge: balanced unions still optimize to one flattened Union in file order") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+    val engine = new MultiSourceAdEtl(Configs.podl)
+    val n = 11 // odd: a frame carries over unpaired at some levels
+    val merged = engine.merge((0 until n).map(i => Seq((i, s"f$i")).toDF("i", "file")))
+    val unions = merged.queryExecution.optimizedPlan.collect { case u: Union => u }
+    assert(unions.size == 1)
+    val childOrder = unions.head.children.map(_.collectFirst { case l: LocalRelation => l.data.head.getInt(0) })
+    assert(childOrder == (0 until n).map(Some(_)))
+    assert(merged.collect().map(_.getInt(0)).toSeq == (0 until n))
+  }
 }

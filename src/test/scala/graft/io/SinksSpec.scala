@@ -112,4 +112,15 @@ class SinksSpec extends SparkSpec {
     val noDate = Seq(1, 2).toDF("n")
     intercept[IllegalArgumentException] { A1.makeDateFilename("x", noDate) }
   }
+
+  test("countAndDateFilename: row count and the same filename from one aggregation") {
+    // a second, later Date column must not move the name off the first one
+    val df = Seq(("2025-08-01", "2030-01-01"), ("2025-08-03", "2030-01-02"), ("2025-08-02", null))
+      .toDF("Day", "Later")
+      .select(col("Day").cast(DateType).as("Day"), col("Later").cast(DateType).as("Later"))
+    assert(A1.countAndDateFilename("apsl", df) == ((3L, "apsl_2025-08-01–2025-08-03.csv")))
+    assert(A1.countAndDateFilename("apsl", df)._2 == A1.makeDateFilename("apsl", df))
+    val e = intercept[IllegalArgumentException] { A1.countAndDateFilename("x", Seq(1, 2).toDF("n")) }
+    assert(e.getMessage.contains("Date col not found"))
+  }
 }
