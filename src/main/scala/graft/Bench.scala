@@ -2,8 +2,6 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR (default sf0.1), forces full materialization via the
   * noop sink (no driver collect, no sink I/O), and prints one JSON line.
@@ -17,20 +15,7 @@ object Bench {
     // gate below): a drifted literal would silently stop history appends
     val defaultSfDir = "/root/testdata/sf0.1"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // sized to the bench SFs (tens-of-MB single-file tables): small enough
-      // that scans split across cores, irrelevant at production file sizes
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tz-naive parquet timestamps → TIMESTAMP (UTC session), not NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm every query once at the smallest SF so measurements capture

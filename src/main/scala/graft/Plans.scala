@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-capture tool for the optimization rounds: writes
   * `explain("formatted")` of each named SparkEntry query (built against
   * SPARK_GRAFT_SF_DIR) to `<outDir>/<query>_<tag>.txt` — the before/after
   * evidence files under plans/rNN/ that let the judge check plan claims
-  * without running Spark. Same session conf as Bench so the captured
+  * without running Spark. The same GraftSession as Bench, so the captured
   * plans are the benched plans. Usage:
   *   sbt "runMain graft.Plans plans/r20 before q_topk,s_index_recall_curve"
   */
@@ -14,17 +12,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val Array(outDir, tag, names) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     for (n <- names.split(",").map(_.trim).filter(_.nonEmpty)) {

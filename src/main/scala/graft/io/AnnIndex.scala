@@ -104,7 +104,7 @@ object AnnIndex {
     * the base ids the same way, keeping the sf100 DuckDB replay at
     * ~1/41 volume while the engine still runs the full plan shape).
     */
-  private def embFor(s: SparkSession, d: String,
+  private[graft] def embFor(s: SparkSession, d: String,
       prime: Option[Int]): DataFrame = {
     val emb = graft.queries.Tables.t(s, d, "embeddings")
     prime.fold(emb)(p =>

@@ -369,6 +369,132 @@ object Similarity {
     }
   }
 
+  /** Per-cell census of a persisted coded-vector tree: vector count,
+    * min/max vec_id and the base-8 checksum of every vector's four PQ
+    * codes — the build/compact entries' result, read back FROM the
+    * written artifacts.
+    */
+  private def cellCensus(vectors: DataFrame): DataFrame =
+    vectors.groupBy(col("cell").cast("bigint").as("cell"))
+      .agg(count(lit(1)).as("n_vecs"),
+        min("vec_id").as("min_vec"), max("vec_id").as("max_vec"),
+        sum(col("c0") + col("c1") * 8 + col("c2") * 64 + col("c3") * 512)
+          .cast("bigint").as("code_sum"))
+      .orderBy("cell")
+
+  /** The recall ledgers' corpus and query batch. `None`: the full corpus
+    * and the `vec_id < batch` panel. `Some(p)`: the 1-in-p md5 stratum
+    * (ground truth is defined w.r.t. the indexed corpus) and its `batch`
+    * smallest ids — a TakeOrdered, since `vec_id < batch` would mostly
+    * miss the draw.
+    */
+  private def recallPanel(s: org.apache.spark.sql.SparkSession, d: String,
+      prime: Option[Int]): (DataFrame, DataFrame) = {
+    graft.functions.GraftFunctions.ensureRegistered(s)
+    val I = graft.io.AnnIndex
+    val emb = I.embFor(s, d, prime)
+    val batch = prime.fold(emb.filter(col("vec_id") < I.batch))(_ =>
+      emb.orderBy("vec_id").limit(I.batch))
+    (emb, batch.select(col("vec_id").as("qid"), col("embedding").as("qv")))
+  }
+
+  /** Exact brute-force top-`topK` per qid — the ground truth every recall
+    * ledger joins to, computed ONCE per entry and shared by all of its
+    * sweep points. O(batch·N) by design (ground truth costs a linear
+    * scan); 4-dp rounded cosine + vec_id tie-break, self row excluded.
+    */
+  private def exactTopK(emb: DataFrame, qs: DataFrame): DataFrame = {
+    val cos = graft.functions.GraftFunctions.cosineSim _
+    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
+    emb.crossJoin(broadcast(qs))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id"),
+        round(cos(col("embedding"), col("qv")), 4).as("cos"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= graft.io.AnnIndex.topK)
+      .select(col("qid"), col("vec_id"), lit(1L).as("hit"))
+  }
+
+  /** Index answers from several trees or sweep points, each tagged with
+    * its `key` value, as one (key, qid, vec_id) frame.
+    */
+  private def tagged(key: String, points: Seq[(Any, DataFrame)]): DataFrame =
+    points.map { case (v, df) =>
+      df.select(lit(v).as(key), col("qid"), col("vec_id"))
+    }.reduce(_ unionByName _)
+
+  /** The recall ledger: index answers left-joined to the exact pass,
+    * hits counted per `key`. Per-qid rows divide by topK; every other
+    * key pools the whole batch (batch·topK).
+    */
+  private def recallLedger(key: String, hits: DataFrame,
+      exact: DataFrame): DataFrame = {
+    val I = graft.io.AnnIndex
+    val denom = if (key == "qid") I.topK else I.batch * I.topK
+    hits.join(exact, Seq("qid", "vec_id"), "left")
+      .groupBy(key)
+      .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_hit"))
+      .select(col(key), col("n_hit"),
+        round(col("n_hit") / lit(denom.toDouble), 4).as("recall_at_5"))
+      .orderBy(key)
+  }
+
+  /** s_index_recall(_s41): recall@5 per qid of the index's top-5. */
+  private def indexRecall(prime: Option[Int]): Q = (s, d) => {
+    val I = graft.io.AnnIndex
+    val (emb, qs) = recallPanel(s, d, prime)
+    val root = I.ensure(s, d, prime)
+    recallLedger("qid", I.querySegments(s, d, root, Seq("vectors"), prime)
+      .select(col("qid"), col("vec_id")), exactTopK(emb, qs))
+  }
+
+  /** s_index_recall_curve(_s41): recall@5 per nprobe over [[recallSweep]],
+    * one shared probe extract for the whole sweep (querySweep).
+    */
+  private def indexRecallCurve(prime: Option[Int]): Q = (s, d) => {
+    val I = graft.io.AnnIndex
+    val (emb, qs) = recallPanel(s, d, prime)
+    val root = I.ensure(s, d, prime)
+    val sweep = I.querySweep(s, d, root, Seq("vectors"), prime,
+      sweep = recallSweep)
+    recallLedger("nprobe",
+      tagged("nprobe", sweep.map { case (np, df) => np.toLong -> df }),
+      exactTopK(emb, qs))
+  }
+
+  /** s_index_recall_quantizers(_matched)(_s41): the k-means tree vs the
+    * label tree at nprobe = 3. `matched` trains as many cells as the
+    * (stratum) corpus has labels instead of nCodes.
+    */
+  private def indexRecallQuantizers(prime: Option[Int],
+      matched: Boolean): Q = (s, d) => {
+    val I = graft.io.AnnIndex
+    val (emb, qs) = recallPanel(s, d, prime)
+    val k =
+      if (matched) emb.select("label").distinct().count().toInt else I.nCodes
+    val roots = Seq("kmeans" -> I.ensureKMeans(s, d, prime, k),
+      "label" -> I.ensure(s, d, prime))
+    recallLedger("quantizer", tagged("quantizer", roots.map {
+      case (tag, root) => tag -> I.querySegments(s, d, root, Seq("vectors"), prime)
+    }), exactTopK(emb, qs))
+  }
+
+  /** s_index_recall_residual(_s41) and s_index_recall_coding_adc: the
+    * raw-coded vs residual-coded tree over the same cells, refine depth
+    * `refineK` (shortlist = the production point, topK = ADC only).
+    */
+  private def indexRecallCoding(prime: Option[Int], refineK: Int): Q =
+    (s, d) => {
+      val I = graft.io.AnnIndex
+      val (emb, qs) = recallPanel(s, d, prime)
+      val roots = Seq("raw" -> (I.ensure(s, d, prime), false),
+        "residual" -> (I.ensureResidual(s, d, prime), true))
+      recallLedger("coding", tagged("coding", roots.map {
+        case (tag, (root, res)) => tag -> I.querySegments(s, d, root,
+          Seq("vectors"), prime, refineK = refineK, residual = res)
+      }), exactTopK(emb, qs))
+    }
+
   val queries: Map[String, Q] = Map(
     // Exact brute-force cosine top-k against one query vector (vec_id 0).
     // The query side is a 1-row broadcast; the scan side stays narrow.
@@ -841,16 +967,8 @@ object Similarity {
     // replays assignment + coding from the base table
     // (annIndexCtesSql). Build cost IS the measured span — that is the
     // number a 100 TB ingest budget needs.
-    "s_index_build" -> ((s, d) => {
-      val root = graft.io.AnnIndex.build(s, d)
-      s.read.parquet(s"$root/vectors")
-        .groupBy(col("cell").cast("bigint").as("cell"))
-        .agg(count(lit(1)).as("n_vecs"),
-          min("vec_id").as("min_vec"), max("vec_id").as("max_vec"),
-          sum(col("c0") + col("c1") * 8 + col("c2") * 64 + col("c3") * 512)
-            .cast("bigint").as("code_sum"))
-        .orderBy("cell")
-    }),
+    "s_index_build" -> ((s, d) =>
+      cellCensus(s.read.parquet(s"${graft.io.AnnIndex.build(s, d)}/vectors"))),
 
     // PERSISTED IVF-PQ index, DELTA INGEST (segment growth): a batch of
     // NEW vectors is added to the index WITHOUT retraining — assigned
@@ -912,13 +1030,7 @@ object Similarity {
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$root/vectors_compact")
-      s.read.parquet(s"$root/vectors_compact")
-        .groupBy(col("cell").cast("bigint").as("cell"))
-        .agg(count(lit(1)).as("n_vecs"),
-          min("vec_id").as("min_vec"), max("vec_id").as("max_vec"),
-          sum(col("c0") + col("c1") * 8 + col("c2") * 64 + col("c3") * 512)
-            .cast("bigint").as("code_sum"))
-        .orderBy("cell")
+      cellCensus(s.read.parquet(s"$root/vectors_compact"))
     }),
 
     // PERSISTED IVF-PQ index, query side: a 4-query batch answered with
@@ -1059,30 +1171,7 @@ object Similarity {
     // SF-gateable corpus entry. Crude 8-code sample codebook + nprobe
     // 3/10 ⇒ recall@5 lands at 0.2–0.6 at test SFs; the ENTRY pins the
     // exact value, not a floor.
-    "s_index_recall" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      val I = graft.io.AnnIndex
-      val root = I.ensure(s, d)
-      val idx = I.querySegments(s, d, root, Seq("vectors"))
-        .select(col("qid"), col("vec_id"))
-      val cos = graft.functions.GraftFunctions.cosineSim _
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter(col("vec_id") < I.batch)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      val exact = emb.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(col("embedding"), col("qv")), 4).as("cos"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= I.topK)
-        .select(col("qid"), col("vec_id"), lit(1L).as("hit"))
-      idx.join(exact, Seq("qid", "vec_id"), "left")
-        .groupBy("qid")
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_hit"))
-        .select(col("qid"), col("n_hit"),
-          round(col("n_hit") / lit(I.topK.toDouble), 4).as("recall_at_5"))
-        .orderBy("qid")
-    }),
+    "s_index_recall" -> indexRecall(None),
 
     // The recall census's STRATUM twin — closes the quality loop at the
     // sf100 gate: the stratum index's top-5 vs exact brute force over
@@ -1093,31 +1182,7 @@ object Similarity {
     // is a real codebook-quality measurement — 1.0/0.8/0.6/1.0 at the
     // 1000x gate, hash-matched (see SCALE_SF100.md); on VERBATIM
     // layouts the deterministic 1.0s are themselves what the hash pins.
-    "s_index_recall_s41" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      val I = graft.io.AnnIndex
-      val root = I.ensure(s, d, Some(41))
-      val idx = I.querySegments(s, d, root, Seq("vectors"), Some(41))
-        .select(col("qid"), col("vec_id"))
-      val cos = graft.functions.GraftFunctions.cosineSim _
-      val emb = t(s, d, "embeddings")
-        .filter(Tables.stratum(col("vec_id"), 41))
-      val qs = emb.orderBy("vec_id").limit(I.batch)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      val exact = emb.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(col("embedding"), col("qv")), 4).as("cos"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= I.topK)
-        .select(col("qid"), col("vec_id"), lit(1L).as("hit"))
-      idx.join(exact, Seq("qid", "vec_id"), "left")
-        .groupBy("qid")
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_hit"))
-        .select(col("qid"), col("n_hit"),
-          round(col("n_hit") / lit(I.topK.toDouble), 4).as("recall_at_5"))
-        .orderBy("qid")
-    }),
+    "s_index_recall_s41" -> indexRecall(Some(41)),
 
     // RECALL-vs-NPROBE CURVE (VERDICT r17 ask #5) — the number an ANN
     // deployment actually TUNES: sweeping the probe budget trades scan
@@ -1134,35 +1199,7 @@ object Similarity {
     // so the top row is the index's refine ceiling. All sweep points
     // answer from the SAME ensure-cached artifacts — the span is 3
     // probe-pruned query plans + one linear ground-truth pass.
-    "s_index_recall_curve" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      val I = graft.io.AnnIndex
-      val root = I.ensure(s, d)
-      val cos = graft.functions.GraftFunctions.cosineSim _
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter(col("vec_id") < I.batch)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      val exact = emb.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(col("embedding"), col("qv")), 4).as("cos"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= I.topK)
-        .select(col("qid"), col("vec_id"), lit(1L).as("hit"))
-      // r20: ONE shared probe extract for the whole sweep (each point's
-      // probe list is a prefix of the max-budget ranking — querySweep)
-      I.querySweep(s, d, root, Seq("vectors"), sweep = recallSweep)
-        .map { case (np, df) =>
-          df.select(lit(np.toLong).as("nprobe"), col("qid"), col("vec_id"))
-        }.reduce(_ unionByName _)
-        .join(exact, Seq("qid", "vec_id"), "left")
-        .groupBy("nprobe")
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_hit"))
-        .select(col("nprobe"), col("n_hit"),
-          round(col("n_hit") / lit((I.batch * I.topK).toDouble), 4)
-            .as("recall_at_5"))
-        .orderBy("nprobe")
-    }),
+    "s_index_recall_curve" -> indexRecallCurve(None),
 
     // The tuning curve's STRATUM twin — the device that takes the
     // recall-vs-nprobe ledger to the high-SF gates alongside the other
@@ -1171,35 +1208,7 @@ object Similarity {
     // 4-smallest-stratum-ids batch. On the jittered perturb corpora the
     // sweep measures codebook quality at scale; on verbatim layouts the
     // deterministic values are themselves what the hash pins.
-    "s_index_recall_curve_s41" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      val I = graft.io.AnnIndex
-      val root = I.ensure(s, d, Some(41))
-      val cos = graft.functions.GraftFunctions.cosineSim _
-      val emb = t(s, d, "embeddings")
-        .filter(Tables.stratum(col("vec_id"), 41))
-      val qs = emb.orderBy("vec_id").limit(I.batch)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      val exact = emb.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(col("embedding"), col("qv")), 4).as("cos"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= I.topK)
-        .select(col("qid"), col("vec_id"), lit(1L).as("hit"))
-      // r20: one shared probe extract for the whole sweep (querySweep)
-      I.querySweep(s, d, root, Seq("vectors"), Some(41), sweep = recallSweep)
-        .map { case (np, df) =>
-          df.select(lit(np.toLong).as("nprobe"), col("qid"), col("vec_id"))
-        }.reduce(_ unionByName _)
-        .join(exact, Seq("qid", "vec_id"), "left")
-        .groupBy("nprobe")
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_hit"))
-        .select(col("nprobe"), col("n_hit"),
-          round(col("n_hit") / lit((I.batch * I.topK).toDouble), 4)
-            .as("recall_at_5"))
-        .orderBy("nprobe")
-    }),
+    "s_index_recall_curve_s41" -> indexRecallCurve(Some(41)),
 
     // THE COST AXIS of the tuning ledger — what the recall curve is
     // read AGAINST: candidate rows SCANNED per sweep point (the probed
@@ -1305,16 +1314,8 @@ object Similarity {
     // 8 would mostly miss the draw), and the query batch is the 4
     // smallest stratum ids. Base-SF rows pin the stratum PLUMBING; the
     // twins become load-bearing on the scaled corpora.
-    "s_index_build_s41" -> ((s, d) => {
-      val root = graft.io.AnnIndex.build(s, d, Some(41))
-      s.read.parquet(s"$root/vectors")
-        .groupBy(col("cell").cast("bigint").as("cell"))
-        .agg(count(lit(1)).as("n_vecs"),
-          min("vec_id").as("min_vec"), max("vec_id").as("max_vec"),
-          sum(col("c0") + col("c1") * 8 + col("c2") * 64 + col("c3") * 512)
-            .cast("bigint").as("code_sum"))
-        .orderBy("cell")
-    }),
+    "s_index_build_s41" -> ((s, d) => cellCensus(s.read.parquet(
+      s"${graft.io.AnnIndex.build(s, d, Some(41))}/vectors"))),
 
     "s_index_query_s41" -> ((s, d) => {
       val I = graft.io.AnnIndex
@@ -1369,16 +1370,8 @@ object Similarity {
     // s_index_build), which pins seed selection, both Lloyd rounds, the
     // trained-centroid rounding and the final assignment of every
     // vector.
-    "s_index_build_kmeans" -> ((s, d) => {
-      val root = graft.io.AnnIndex.buildKMeans(s, d)
-      s.read.parquet(s"$root/vectors")
-        .groupBy(col("cell").cast("bigint").as("cell"))
-        .agg(count(lit(1)).as("n_vecs"),
-          min("vec_id").as("min_vec"), max("vec_id").as("max_vec"),
-          sum(col("c0") + col("c1") * 8 + col("c2") * 64 + col("c3") * 512)
-            .cast("bigint").as("code_sum"))
-        .orderBy("cell")
-    }),
+    "s_index_build_kmeans" -> ((s, d) => cellCensus(s.read.parquet(
+      s"${graft.io.AnnIndex.buildKMeans(s, d)}/vectors"))),
 
     // THE MEASUREMENT THE TRAINED QUANTIZER EXISTS FOR: recall@5 of the
     // label-cell tree vs the k-means tree at the SAME probe budget
@@ -1388,34 +1381,8 @@ object Similarity {
     // Both trees answer from ensure-cached artifacts; the span is two
     // probe-pruned query plans + the census's one linear ground-truth
     // pass.
-    "s_index_recall_quantizers" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      val I = graft.io.AnnIndex
-      val roots = Seq("kmeans" -> I.ensureKMeans(s, d),
-        "label" -> I.ensure(s, d))
-      val cos = graft.functions.GraftFunctions.cosineSim _
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter(col("vec_id") < I.batch)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      val exact = emb.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(col("embedding"), col("qv")), 4).as("cos"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= I.topK)
-        .select(col("qid"), col("vec_id"), lit(1L).as("hit"))
-      roots.map { case (tag, root) =>
-          I.querySegments(s, d, root, Seq("vectors"))
-            .select(lit(tag).as("quantizer"), col("qid"), col("vec_id"))
-        }.reduce(_ unionByName _)
-        .join(exact, Seq("qid", "vec_id"), "left")
-        .groupBy("quantizer")
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_hit"))
-        .select(col("quantizer"), col("n_hit"),
-          round(col("n_hit") / lit((I.batch * I.topK).toDouble), 4)
-            .as("recall_at_5"))
-        .orderBy("quantizer")
-    }),
+    "s_index_recall_quantizers" ->
+      indexRecallQuantizers(None, matched = false),
 
     // The quantizer A/B's STRATUM twin — takes the trained-vs-label
     // comparison to the high-SF gates: both trees built over the
@@ -1425,35 +1392,8 @@ object Similarity {
     // ground-truth pass. On the jittered sf100 corpus this is the A/B
     // measurement AT SCALE: does training the coarse quantizer still
     // buy recall when every replicated row is a distinct near-neighbor?
-    "s_index_recall_quantizers_s41" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      val I = graft.io.AnnIndex
-      val roots = Seq("kmeans" -> I.ensureKMeans(s, d, Some(41)),
-        "label" -> I.ensure(s, d, Some(41)))
-      val cos = graft.functions.GraftFunctions.cosineSim _
-      val emb = t(s, d, "embeddings")
-        .filter(Tables.stratum(col("vec_id"), 41))
-      val qs = emb.orderBy("vec_id").limit(I.batch)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      val exact = emb.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(col("embedding"), col("qv")), 4).as("cos"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= I.topK)
-        .select(col("qid"), col("vec_id"), lit(1L).as("hit"))
-      roots.map { case (tag, root) =>
-          I.querySegments(s, d, root, Seq("vectors"), Some(41))
-            .select(lit(tag).as("quantizer"), col("qid"), col("vec_id"))
-        }.reduce(_ unionByName _)
-        .join(exact, Seq("qid", "vec_id"), "left")
-        .groupBy("quantizer")
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_hit"))
-        .select(col("quantizer"), col("n_hit"),
-          round(col("n_hit") / lit((I.batch * I.topK).toDouble), 4)
-            .as("recall_at_5"))
-        .orderBy("quantizer")
-    }),
+    "s_index_recall_quantizers_s41" ->
+      indexRecallQuantizers(Some(41), matched = false),
 
     // The MATCHED-k quantizer A/B (r19 VERDICT ask #3): the 8-seed
     // kmeans tree vs the 10-cell label tree partly measured CELL COUNT,
@@ -1464,70 +1404,15 @@ object Similarity {
     // equal partition granularity. Same probe budget, same shared
     // ground-truth pass as the unmatched row, which stays in the corpus
     // as the cell-count control.
-    "s_index_recall_quantizers_matched" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      val I = graft.io.AnnIndex
-      val emb = t(s, d, "embeddings")
-      val k = emb.select("label").distinct().count().toInt
-      val roots = Seq("kmeans" -> I.ensureKMeans(s, d, k = k),
-        "label" -> I.ensure(s, d))
-      val cos = graft.functions.GraftFunctions.cosineSim _
-      val qs = emb.filter(col("vec_id") < I.batch)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      val exact = emb.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(col("embedding"), col("qv")), 4).as("cos"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= I.topK)
-        .select(col("qid"), col("vec_id"), lit(1L).as("hit"))
-      roots.map { case (tag, root) =>
-          I.querySegments(s, d, root, Seq("vectors"))
-            .select(lit(tag).as("quantizer"), col("qid"), col("vec_id"))
-        }.reduce(_ unionByName _)
-        .join(exact, Seq("qid", "vec_id"), "left")
-        .groupBy("quantizer")
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_hit"))
-        .select(col("quantizer"), col("n_hit"),
-          round(col("n_hit") / lit((I.batch * I.topK).toDouble), 4)
-            .as("recall_at_5"))
-        .orderBy("quantizer")
-    }),
+    "s_index_recall_quantizers_matched" ->
+      indexRecallQuantizers(None, matched = true),
 
     // The matched-k A/B's stratum twin — k = the STRATUM's label
     // cardinality, seeds = the k smallest stratum ids densely relabeled
     // (codebookRows' stratified rule at n = k), so the sf100 gate
     // measures matched-k training at 1000× on ~1/41 replay volume.
-    "s_index_recall_quantizers_matched_s41" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      val I = graft.io.AnnIndex
-      val emb = t(s, d, "embeddings")
-        .filter(Tables.stratum(col("vec_id"), 41))
-      val k = emb.select("label").distinct().count().toInt
-      val roots = Seq("kmeans" -> I.ensureKMeans(s, d, Some(41), k),
-        "label" -> I.ensure(s, d, Some(41)))
-      val cos = graft.functions.GraftFunctions.cosineSim _
-      val qs = emb.orderBy("vec_id").limit(I.batch)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      val exact = emb.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(col("embedding"), col("qv")), 4).as("cos"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= I.topK)
-        .select(col("qid"), col("vec_id"), lit(1L).as("hit"))
-      roots.map { case (tag, root) =>
-          I.querySegments(s, d, root, Seq("vectors"), Some(41))
-            .select(lit(tag).as("quantizer"), col("qid"), col("vec_id"))
-        }.reduce(_ unionByName _)
-        .join(exact, Seq("qid", "vec_id"), "left")
-        .groupBy("quantizer")
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_hit"))
-        .select(col("quantizer"), col("n_hit"),
-          round(col("n_hit") / lit((I.batch * I.topK).toDouble), 4)
-            .as("recall_at_5"))
-        .orderBy("quantizer")
-    }),
+    "s_index_recall_quantizers_matched_s41" ->
+      indexRecallQuantizers(Some(41), matched = true),
 
     // RESIDUAL-coded build census (r19 VERDICT ask #6): the FAISS
     // by_residual discipline — PQ codes quantize x − centroid(cell)
@@ -1536,84 +1421,22 @@ object Similarity {
     // IDENTICAL to the base tree; only the codebook/coding axis moves.
     // The census pins the residual subtraction, the residual codebook
     // and every vector's residual code argmax, cell by cell.
-    "s_index_build_residual" -> ((s, d) => {
-      val root = graft.io.AnnIndex.buildResidual(s, d)
-      s.read.parquet(s"$root/vectors")
-        .groupBy(col("cell").cast("bigint").as("cell"))
-        .agg(count(lit(1)).as("n_vecs"),
-          min("vec_id").as("min_vec"), max("vec_id").as("max_vec"),
-          sum(col("c0") + col("c1") * 8 + col("c2") * 64 + col("c3") * 512)
-            .cast("bigint").as("code_sum"))
-        .orderBy("cell")
-    }),
+    "s_index_build_residual" -> ((s, d) => cellCensus(s.read.parquet(
+      s"${graft.io.AnnIndex.buildResidual(s, d)}/vectors"))),
 
     // THE MEASUREMENT RESIDUAL CODING EXISTS FOR: recall@5 of raw-coded
     // vs residual-coded trees at the SAME probe budget and shortlist,
     // against one shared exact ground-truth pass — the coding-axis
     // sibling of the quantizer A/B (same cells both sides, so any
     // recall delta is pure ADC shortlist quality).
-    "s_index_recall_residual" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      val I = graft.io.AnnIndex
-      val roots = Seq("raw" -> (I.ensure(s, d), false),
-        "residual" -> (I.ensureResidual(s, d), true))
-      val cos = graft.functions.GraftFunctions.cosineSim _
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter(col("vec_id") < I.batch)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      val exact = emb.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(col("embedding"), col("qv")), 4).as("cos"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= I.topK)
-        .select(col("qid"), col("vec_id"), lit(1L).as("hit"))
-      roots.map { case (tag, (root, res)) =>
-          I.querySegments(s, d, root, Seq("vectors"), residual = res)
-            .select(lit(tag).as("coding"), col("qid"), col("vec_id"))
-        }.reduce(_ unionByName _)
-        .join(exact, Seq("qid", "vec_id"), "left")
-        .groupBy("coding")
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_hit"))
-        .select(col("coding"), col("n_hit"),
-          round(col("n_hit") / lit((I.batch * I.topK).toDouble), 4)
-            .as("recall_at_5"))
-        .orderBy("coding")
-    }),
+    "s_index_recall_residual" ->
+      indexRecallCoding(None, graft.io.AnnIndex.shortlist),
 
     // The residual A/B's stratum twin — residual coding measured at the
     // sf100 gate on ~1/41 replay volume (stratum cells, stratum seeds'
     // residuals, 4-smallest-stratum-ids batch).
-    "s_index_recall_residual_s41" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      val I = graft.io.AnnIndex
-      val roots = Seq("raw" -> (I.ensure(s, d, Some(41)), false),
-        "residual" -> (I.ensureResidual(s, d, Some(41)), true))
-      val cos = graft.functions.GraftFunctions.cosineSim _
-      val emb = t(s, d, "embeddings")
-        .filter(Tables.stratum(col("vec_id"), 41))
-      val qs = emb.orderBy("vec_id").limit(I.batch)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      val exact = emb.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(col("embedding"), col("qv")), 4).as("cos"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= I.topK)
-        .select(col("qid"), col("vec_id"), lit(1L).as("hit"))
-      roots.map { case (tag, (root, res)) =>
-          I.querySegments(s, d, root, Seq("vectors"), Some(41),
-              residual = res)
-            .select(lit(tag).as("coding"), col("qid"), col("vec_id"))
-        }.reduce(_ unionByName _)
-        .join(exact, Seq("qid", "vec_id"), "left")
-        .groupBy("coding")
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_hit"))
-        .select(col("coding"), col("n_hit"),
-          round(col("n_hit") / lit((I.batch * I.topK).toDouble), 4)
-            .as("recall_at_5"))
-        .orderBy("coding")
-    }),
+    "s_index_recall_residual_s41" ->
+      indexRecallCoding(Some(41), graft.io.AnnIndex.shortlist),
 
     // The coding A/B WITHOUT the exact-refine safety net: with
     // refineK = topK the refine re-ranks exactly the ADC top-5, so the
@@ -1622,35 +1445,8 @@ object Similarity {
     // above measures the production operating point, where a 20-deep
     // exact refine masks coding differences; the gap between the two
     // rows per coding is what the refine stage buys).
-    "s_index_recall_coding_adc" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      val I = graft.io.AnnIndex
-      val roots = Seq("raw" -> (I.ensure(s, d), false),
-        "residual" -> (I.ensureResidual(s, d), true))
-      val cos = graft.functions.GraftFunctions.cosineSim _
-      val emb = t(s, d, "embeddings")
-      val qs = emb.filter(col("vec_id") < I.batch)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      val exact = emb.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(col("embedding"), col("qv")), 4).as("cos"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= I.topK)
-        .select(col("qid"), col("vec_id"), lit(1L).as("hit"))
-      roots.map { case (tag, (root, res)) =>
-          I.querySegments(s, d, root, Seq("vectors"), refineK = I.topK,
-              residual = res)
-            .select(lit(tag).as("coding"), col("qid"), col("vec_id"))
-        }.reduce(_ unionByName _)
-        .join(exact, Seq("qid", "vec_id"), "left")
-        .groupBy("coding")
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("bigint").as("n_hit"))
-        .select(col("coding"), col("n_hit"),
-          round(col("n_hit") / lit((I.batch * I.topK).toDouble), 4)
-            .as("recall_at_5"))
-        .orderBy("coding")
-    }),
+    "s_index_recall_coding_adc" ->
+      indexRecallCoding(None, graft.io.AnnIndex.topK),
 
     // COST-AWARE OPERATING-POINT SELECTOR (r19 VERDICT ask #7) — closes
     // the loop the two ledgers opened: the recall curve says what each
@@ -2407,14 +2203,6 @@ object Similarity {
         |SELECT vec_id, round(d0 + d1 + d2 + d3, 4) AS approx_dot
         |FROM adc ORDER BY approx_dot DESC, vec_id LIMIT 10""".stripMargin
 
-  /** Shared replay of the persisted IVF-PQ index's TRAIN math
-    * (graft.io.AnnIndex.build) from the base embeddings table: label
-    * centroids (9-dp per-position means), every vector's coarse-cell
-    * argmax, the 8-code×4-subspace codebook, and every vector's
-    * per-subspace code argmax — the artifacts s_index_build persists and
-    * s_index_query loads. Ends without a trailing comma so callers
-    * append their own CTEs.
-    */
   /** The recall-curve sweep points: (nprobe, refineK) with refineK =
     * ⌈20·nprobe/3⌉ — ONE definition feeding both the engine entry and
     * its DuckDB replay so the two can never drift.
@@ -2426,15 +2214,6 @@ object Similarity {
     Seq(3, 5, 10).map(np =>
       (np, math.ceil(graft.io.AnnIndex.shortlist * np / 3.0).toInt))
 
-  /** The recall-curve replay tail — brute-force ground truth over the
-    * corpus CTE `e`, then the probe/ADC/shortlist/refine hierarchy
-    * instantiated per sweep point (CTE names suffixed by nprobe, refine
-    * depth from [[recallSweep]]), aggregated to one row per nprobe.
-    * Callers prepend a train block (annIndexCtesSql or its stratified
-    * twin — both define e/c/cb/ms/assign/codes), a `q` batch CTE and
-    * the shared `qlut`, so the full and stratum curve oracles compose
-    * from ONE definition.
-    */
   /** One probe→ADC→shortlist→refine hierarchy instance over arbitrary
     * centroid/assignment CTE names, CTE names suffixed by `sfx` — the
     * shared builder behind the recall-curve sweep points (suffix = the
@@ -2512,26 +2291,144 @@ object Similarity {
       |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) <= ${graft.io.AnnIndex.topK})"""
       .stripMargin
 
-  private def recallCurveTailSql: String = {
-    // engine-shared constants interpolated, not re-hardcoded (r18
-    // ADVICE: a future change to AnnIndex.batch/topK must not silently
-    // desynchronize the replay from the Spark entries)
-    val denom = graft.io.AnnIndex.batch * graft.io.AnnIndex.topK
-    def block(np: Int, rk: Int): String =
-      quantBlockSql(np.toString, "c", "assign", np, rk)
-    def agg(np: Int): String =
-      s"""SELECT CAST($np AS BIGINT) AS nprobe,
-        |  CAST(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-        |  round(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) / $denom.0, 4) AS recall_at_5
-        |FROM idx$np i LEFT JOIN bf b ON b.qid = i.qid AND b.vec_id = i.vec_id"""
-        .stripMargin
-    s"""$bfCteSql,
-      |${recallSweep.map { case (np, rk) => block(np, rk) }.mkString(",\n")}
-      |SELECT * FROM (
-      |${recallSweep.map { case (np, _) => agg(np) }.mkString("\nUNION ALL\n")})
-      |ORDER BY nprobe""".stripMargin
+  /** One recall-ledger row set: index answers `idx<sfx>` left-joined to
+    * the exact pass `bf`, labelled `tag` (an SQL expression) under
+    * `keyCol`. Per-qid rows group by qid and divide by topK; every other
+    * key pools the whole batch (batch·topK). Engine constants are
+    * interpolated, so the replay cannot desynchronize from the entries.
+    */
+  private def recallAggSql(keyCol: String, tag: String, sfx: String): String = {
+    val I = graft.io.AnnIndex
+    val perQid = keyCol == "qid"
+    val denom = if (perQid) I.topK else I.batch * I.topK
+    val hits = "sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END)"
+    s"""SELECT $tag AS $keyCol,
+      |  CAST($hits AS BIGINT) AS n_hit,
+      |  round($hits / $denom.0, 4) AS recall_at_5
+      |FROM idx$sfx i LEFT JOIN bf b ON b.qid = i.qid AND b.vec_id = i.vec_id"""
+      .stripMargin + (if (perQid) "\nGROUP BY i.qid" else "")
   }
 
+  /** The train block for a stratum switch: `None` = annIndexCtesSql,
+    * `Some(p)` = its 1-in-p twin (same CTE names either way).
+    */
+  private def trainCtesSql(prime: Option[Int]): String =
+    prime.fold(annIndexCtesSql)(p => annIndexStratCtesSql(stratumSql("vec_id", p)))
+
+  /** The per-(qid, m, code) ADC lookup table of batch `q` over codebook
+    * `cb`.
+    */
+  private val qlutSql: String =
+    """qlut AS (SELECT qid, m, code,
+      |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
+      |         FROM cb, q)""".stripMargin
+
+  /** The self-query batch `q` over corpus CTE `e` plus its `qlut`:
+    * `None` = the `vec_id < batch` panel, `Some(_)` = the `batch`
+    * smallest ids of the (already stratified) `e` — the engine's
+    * recallPanel / probe-extract rule.
+    */
+  private def queryPanelSql(prime: Option[Int]): String = {
+    val batch = graft.io.AnnIndex.batch
+    val q = prime.fold(s"SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $batch")(_ =>
+      s"""SELECT vec_id AS qid, v AS qv FROM (
+        |   SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
+        |   WHERE rn <= $batch""".stripMargin)
+    s"q AS ($q),\n$qlutSql"
+  }
+
+  /** The recall-curve sweep: one index hierarchy per [[recallSweep]]
+    * point (CTE names suffixed by nprobe) and the matching ledger rows.
+    */
+  private def curveBlocks: Seq[String] =
+    recallSweep.map { case (np, rk) =>
+      quantBlockSql(np.toString, "c", "assign", np, rk) }
+  private def curveRows: Seq[(String, String)] =
+    recallSweep.map { case (np, _) => s"CAST($np AS BIGINT)" -> np.toString }
+
+  /** Every recall replay: the train block for `prime`, `extra` CTEs (a
+    * second tree), the query panel, the exact pass, the index
+    * hierarchies `blocks`, then one ledger row set per (tag, suffix).
+    */
+  private def recallSql(prime: Option[Int], extra: Seq[String],
+      blocks: Seq[String], keyCol: String, rows: Seq[(String, String)]): String = {
+    val ctes = Seq(trainCtesSql(prime)) ++ extra ++
+      Seq(queryPanelSql(prime), bfCteSql) ++ blocks
+    s"""WITH ${ctes.mkString(",\n")}
+      |SELECT * FROM (
+      |${rows.map { case (t, sfx) => recallAggSql(keyCol, t, sfx) }.mkString("\nUNION ALL\n")})
+      |ORDER BY $keyCol""".stripMargin
+  }
+
+  /** The per-qid recall census replay: one index hierarchy over c/assign. */
+  private def indexRecallSql(prime: Option[Int]): String = {
+    val I = graft.io.AnnIndex
+    recallSql(prime, Nil, Seq(quantBlockSql("", "c", "assign", I.nProbe, I.shortlist)),
+      "qid", Seq("i.qid" -> ""))
+  }
+
+  /** The quantizer A/B replay: kmeans seeds = the first k ids (`vec_id <
+    * k` on the full corpus, the k smallest stratum ids densely relabeled
+    * on the twin), k = nCodes or, `matched`, the label cardinality.
+    */
+  private def indexRecallQuantizersSql(prime: Option[Int],
+      matched: Boolean): String = {
+    val I = graft.io.AnnIndex
+    // the full-corpus `e` carries no label column; the stratum `e` does
+    val labels = prime.fold("embeddings")(_ => "e")
+    val k =
+      if (matched) s"(SELECT count(DISTINCT label) FROM $labels)"
+      else I.nCodes.toString
+    val seeds = prime.fold(
+      s"SELECT CAST(vec_id AS INT) AS cl, v AS cent FROM e WHERE vec_id < $k")(_ =>
+      s"""SELECT CAST(rn - 1 AS INT) AS cl, v AS cent FROM (
+        |   SELECT v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
+        |   WHERE rn <= $k""".stripMargin)
+    recallSql(prime, Seq(annIndexKMeansCtesSql(seeds)),
+      Seq(quantBlockSql("lab", "c", "assign", I.nProbe, I.shortlist),
+        quantBlockSql("km", "kc", "kassign", I.nProbe, I.shortlist)),
+      "quantizer", Seq("'kmeans'" -> "km", "'label'" -> "lab"))
+  }
+
+  /** The coding A/B replay: raw vs residual hierarchies over the same
+    * cells at refine depth `refineK`; residual seeds = cbsel's dense
+    * relabel on the twin.
+    */
+  private def indexRecallCodingSql(prime: Option[Int], refineK: Int): String = {
+    val I = graft.io.AnnIndex
+    recallSql(prime,
+      Seq(prime.fold(annIndexResidCtesSql())(_ =>
+        annIndexResidCtesSql("SELECT code, vec_id FROM cbsel"))),
+      Seq(quantBlockSql("raw", "c", "assign", I.nProbe, refineK),
+        residBlockSql("res", I.nProbe, refineK)),
+      "coding", Seq("'raw'" -> "raw", "'residual'" -> "res"))
+  }
+
+  /** The per-cell census replay of one coded tree: assignment CTE
+    * `assignCte` joined to the wide per-vector codes of `codesCte`.
+    */
+  private def cellCensusSql(assignCte: String, codesCte: String): String =
+    s"""wide AS (
+      |  SELECT vec_id,
+      |    max(CASE WHEN m = 0 THEN code END) AS c0,
+      |    max(CASE WHEN m = 1 THEN code END) AS c1,
+      |    max(CASE WHEN m = 2 THEN code END) AS c2,
+      |    max(CASE WHEN m = 3 THEN code END) AS c3
+      |  FROM $codesCte GROUP BY vec_id)
+      |SELECT CAST(a.cell AS BIGINT) AS cell, count(*) AS n_vecs,
+      |  min(a.vec_id) AS min_vec, max(a.vec_id) AS max_vec,
+      |  CAST(sum(c0 + c1 * 8 + c2 * 64 + c3 * 512) AS BIGINT) AS code_sum
+      |FROM $assignCte a JOIN wide USING (vec_id)
+      |GROUP BY a.cell ORDER BY cell""".stripMargin
+
+  /** Shared replay of the persisted IVF-PQ index's TRAIN math
+    * (graft.io.AnnIndex.build) from the base embeddings table: label
+    * centroids (9-dp per-position means), every vector's coarse-cell
+    * argmax, the 8-code×4-subspace codebook, and every vector's
+    * per-subspace code argmax — the artifacts s_index_build persists and
+    * s_index_query loads. Ends without a trailing comma so callers
+    * append their own CTEs.
+    */
   private def annIndexCtesSql: String =
     """m0 AS (
       |  SELECT label AS cell, CAST(r.i AS INT) AS pos,
@@ -2729,8 +2626,8 @@ object Similarity {
 
   /** The single-segment query tail — the s_index_query probe/ADC/
     * shortlist/exact-refine hierarchy over c/assign/codes, ending in
-    * the top-topK per qid. Callers prepend a train block and a `q`
-    * batch CTE. `selfExclude` mirrors querySegments' `queries`
+    * the top-topK per qid. Callers prepend a train block, a `q` batch
+    * CTE and its `qlut`. `selfExclude` mirrors querySegments' `queries`
     * parameter: self-query panels exclude the query row itself; an
     * EXTERNAL batch (qids disjoint from every indexed id) has no self
     * row to exclude.
@@ -2748,9 +2645,6 @@ object Similarity {
       |    FROM c, q) WHERE rn <= ${I.nProbe}),
       |cand AS MATERIALIZED (
       |  SELECT p.qid, a.vec_id, a.v FROM assign a JOIN probe p USING (cell)$candMask),
-      |qlut AS (SELECT qid, m, code,
-      |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-      |         FROM cb, q),
       |adc0 AS (
       |  SELECT cand.qid, cand.vec_id,
       |    max(CASE WHEN codes.m = 0 THEN qd END) AS d0,
@@ -2811,9 +2705,10 @@ object Similarity {
   /** The segmented-query probe/ADC/refine tail over massign/mcodes — the
     * s_index_query hierarchy with a caller-supplied extra candidate mask
     * (empty for the plain merged query, the tombstone predicate for the
-    * delete-masked one). Callers provide the `q` CTE.
+    * delete-masked one). Callers provide `q` and `qlut`.
     */
-  private def annIndexMergedTailSql(candMask: String): String =
+  private def annIndexMergedTailSql(candMask: String): String = {
+    val I = graft.io.AnnIndex
     s"""probe AS (
       |  SELECT qid, cell FROM (
       |    SELECT q.qid, c.cell,
@@ -2821,13 +2716,10 @@ object Similarity {
       |        round(list_dot_product(c.centroid, q.qv) /
       |          (sqrt(list_dot_product(c.centroid, c.centroid)) *
       |           sqrt(list_dot_product(q.qv, q.qv))), 9) DESC, c.cell) AS rn
-      |    FROM c, q) WHERE rn <= 3),
+      |    FROM c, q) WHERE rn <= ${I.nProbe}),
       |cand AS MATERIALIZED (
       |  SELECT p.qid, a.vec_id, a.v FROM massign a JOIN probe p USING (cell)
       |  WHERE a.vec_id <> p.qid$candMask),
-      |qlut AS (SELECT qid, m, code,
-      |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-      |         FROM cb, q),
       |adc0 AS (
       |  SELECT cand.qid, cand.vec_id,
       |    max(CASE WHEN mcodes.m = 0 THEN qd END) AS d0,
@@ -2840,7 +2732,7 @@ object Similarity {
       |  GROUP BY cand.qid, cand.vec_id),
       |short AS (
       |  SELECT qid, vec_id, round(d0 + d1 + d2 + d3, 4) AS adc FROM adc0
-      |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) <= 20),
+      |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) <= ${I.shortlist}),
       |ref AS (
       |  SELECT s.qid, s.vec_id,
       |    round(list_dot_product(cand.v, q.qv) /
@@ -2851,8 +2743,9 @@ object Similarity {
       |SELECT qid, CAST(row_number() OVER (PARTITION BY qid
       |    ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk, vec_id, cos
       |FROM ref
-      |QUALIFY rnk <= 5
+      |QUALIFY rnk <= ${I.topK}
       |ORDER BY qid, rnk""".stripMargin
+  }
 
   /** s_semdedup replay with the DATA-DERIVED k and the ADAPTIVE
     * assignment (see semDedup): k = greatest(8, (N+249) // 250) and
@@ -3230,18 +3123,7 @@ object Similarity {
     // recomputed from the base table, base-8 code checksum per vector
     "s_index_build" ->
       s"""WITH $annIndexCtesSql,
-        |wide AS (
-        |  SELECT vec_id,
-        |    max(CASE WHEN m = 0 THEN code END) AS c0,
-        |    max(CASE WHEN m = 1 THEN code END) AS c1,
-        |    max(CASE WHEN m = 2 THEN code END) AS c2,
-        |    max(CASE WHEN m = 3 THEN code END) AS c3
-        |  FROM codes GROUP BY vec_id)
-        |SELECT CAST(a.cell AS BIGINT) AS cell, count(*) AS n_vecs,
-        |  min(a.vec_id) AS min_vec, max(a.vec_id) AS max_vec,
-        |  CAST(sum(c0 + c1 * 8 + c2 * 64 + c3 * 512) AS BIGINT) AS code_sum
-        |FROM assign a JOIN wide USING (vec_id)
-        |GROUP BY a.cell ORDER BY cell""".stripMargin,
+        |${cellCensusSql("assign", "codes")}""".stripMargin,
     // delta segment replay: the same frozen train math (cents/codebook
     // from the BASE corpus), the deterministic re-keyed reversed delta,
     // merged per-cell census
@@ -3334,7 +3216,7 @@ object Similarity {
     // hierarchy the Spark query runs over the loaded artifacts
     "s_index_query" ->
       s"""WITH $annIndexCtesSql,
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < ${graft.io.AnnIndex.batch}),
+        |${queryPanelSql(None)},
         |${annIndexQueryTailSql(selfExclude = true)}""".stripMargin,
     // the external-query replay: same hierarchy, query batch = the
     // first `batch` embeddings REVERSED and re-keyed +2,000,000 — no
@@ -3344,6 +3226,7 @@ object Similarity {
       s"""WITH $annIndexCtesSql,
         |q AS (SELECT vec_id + 2000000 AS qid, list_reverse(v) AS qv
         |      FROM e WHERE vec_id < ${graft.io.AnnIndex.batch}),
+        |$qlutSql,
         |${annIndexQueryTailSql(selfExclude = false)}""".stripMargin,
     // held-out external queries vs the STRATUM index: the stratified
     // train block (e = the 1-in-41 draw), query batch = the 4 smallest
@@ -3356,267 +3239,68 @@ object Similarity {
         |     row_number() OVER (ORDER BY vec_id) AS rn
         |   FROM embeddings WHERE NOT (${stratum41Sql("vec_id")}))
         |   WHERE rn <= ${graft.io.AnnIndex.batch}),
+        |$qlutSql,
         |${annIndexQueryTailSql(selfExclude = false)}""".stripMargin,
     // trained-quantizer build census: the kmeans chain's final
     // assignment joined to the SAME per-vector codes
     "s_index_build_kmeans" ->
       s"""WITH $annIndexCtesSql,
         |${annIndexKMeansCtesSql()},
-        |wide AS (
-        |  SELECT vec_id,
-        |    max(CASE WHEN m = 0 THEN code END) AS c0,
-        |    max(CASE WHEN m = 1 THEN code END) AS c1,
-        |    max(CASE WHEN m = 2 THEN code END) AS c2,
-        |    max(CASE WHEN m = 3 THEN code END) AS c3
-        |  FROM codes GROUP BY vec_id)
-        |SELECT CAST(a.cell AS BIGINT) AS cell, count(*) AS n_vecs,
-        |  min(a.vec_id) AS min_vec, max(a.vec_id) AS max_vec,
-        |  CAST(sum(c0 + c1 * 8 + c2 * 64 + c3 * 512) AS BIGINT) AS code_sum
-        |FROM kassign a JOIN wide USING (vec_id)
-        |GROUP BY a.cell ORDER BY cell""".stripMargin,
+        |${cellCensusSql("kassign", "codes")}""".stripMargin,
     // the quantizer A/B recall row: label-cell and kmeans-cell
     // hierarchies at the same probe budget against ONE shared exact
     // ground truth
-    "s_index_recall_quantizers" -> {
-      val I = graft.io.AnnIndex
-      val denom = I.batch * I.topK
-      def agg(tag: String, sfx: String): String =
-        s"""SELECT '$tag' AS quantizer,
-          |  CAST(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-          |  round(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) / $denom.0, 4) AS recall_at_5
-          |FROM idx$sfx i LEFT JOIN bf b ON b.qid = i.qid AND b.vec_id = i.vec_id"""
-          .stripMargin
-      s"""WITH $annIndexCtesSql,
-        |${annIndexKMeansCtesSql()},
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < ${I.batch}),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
-        |$bfCteSql,
-        |${quantBlockSql("lab", "c", "assign", I.nProbe, I.shortlist)},
-        |${quantBlockSql("km", "kc", "kassign", I.nProbe, I.shortlist)}
-        |SELECT * FROM (
-        |${agg("kmeans", "km")}
-        |UNION ALL
-        |${agg("label", "lab")})
-        |ORDER BY quantizer""".stripMargin
-    },
+    "s_index_recall_quantizers" -> indexRecallQuantizersSql(None, matched = false),
     // the A/B row's stratum twin: the stratified train block (e = the
     // 1-in-41 draw, cbsel's dense relabel doubles as the kmeans seed
     // rule) + both hierarchies at the same probe budget
-    "s_index_recall_quantizers_s41" -> {
-      val I = graft.io.AnnIndex
-      val denom = I.batch * I.topK
-      def agg(tag: String, sfx: String): String =
-        s"""SELECT '$tag' AS quantizer,
-          |  CAST(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-          |  round(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) / $denom.0, 4) AS recall_at_5
-          |FROM idx$sfx i LEFT JOIN bf b ON b.qid = i.qid AND b.vec_id = i.vec_id"""
-          .stripMargin
-      s"""WITH ${annIndexStratCtesSql(stratum41Sql("vec_id"))},
-        |${annIndexKMeansCtesSql("SELECT code AS cl, v AS cent FROM cbsel")},
-        |q AS (SELECT vec_id AS qid, v AS qv FROM (
-        |   SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
-        |   WHERE rn <= ${I.batch}),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
-        |$bfCteSql,
-        |${quantBlockSql("lab", "c", "assign", I.nProbe, I.shortlist)},
-        |${quantBlockSql("km", "kc", "kassign", I.nProbe, I.shortlist)}
-        |SELECT * FROM (
-        |${agg("kmeans", "km")}
-        |UNION ALL
-        |${agg("label", "lab")})
-        |ORDER BY quantizer""".stripMargin
-    },
+    "s_index_recall_quantizers_s41" ->
+      indexRecallQuantizersSql(Some(41), matched = false),
     // the MATCHED-k quantizer A/B: identical to the unmatched row
     // except the Lloyd chain seeds count(DISTINCT label) cells (the
     // engine's k = label-cardinality rule), so the replay pins that the
     // A/B isolates training at equal cell granularity
-    "s_index_recall_quantizers_matched" -> {
-      val I = graft.io.AnnIndex
-      val denom = I.batch * I.topK
-      def agg(tag: String, sfx: String): String =
-        s"""SELECT '$tag' AS quantizer,
-          |  CAST(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-          |  round(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) / $denom.0, 4) AS recall_at_5
-          |FROM idx$sfx i LEFT JOIN bf b ON b.qid = i.qid AND b.vec_id = i.vec_id"""
-          .stripMargin
-      s"""WITH $annIndexCtesSql,
-        |${annIndexKMeansCtesSql(
-          "SELECT CAST(vec_id AS INT) AS cl, v AS cent FROM e " +
-            "WHERE vec_id < (SELECT count(DISTINCT label) FROM embeddings)")},
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < ${I.batch}),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
-        |$bfCteSql,
-        |${quantBlockSql("lab", "c", "assign", I.nProbe, I.shortlist)},
-        |${quantBlockSql("km", "kc", "kassign", I.nProbe, I.shortlist)}
-        |SELECT * FROM (
-        |${agg("kmeans", "km")}
-        |UNION ALL
-        |${agg("label", "lab")})
-        |ORDER BY quantizer""".stripMargin
-    },
+    "s_index_recall_quantizers_matched" ->
+      indexRecallQuantizersSql(None, matched = true),
     // the matched-k A/B's stratum twin: k = the stratum's label
     // cardinality, seeds = the k smallest stratum ids densely relabeled
     // (the codebookRows stratified rule generalized past cbsel's 8)
-    "s_index_recall_quantizers_matched_s41" -> {
-      val I = graft.io.AnnIndex
-      val denom = I.batch * I.topK
-      def agg(tag: String, sfx: String): String =
-        s"""SELECT '$tag' AS quantizer,
-          |  CAST(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-          |  round(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) / $denom.0, 4) AS recall_at_5
-          |FROM idx$sfx i LEFT JOIN bf b ON b.qid = i.qid AND b.vec_id = i.vec_id"""
-          .stripMargin
-      s"""WITH ${annIndexStratCtesSql(stratum41Sql("vec_id"))},
-        |${annIndexKMeansCtesSql(
-          """SELECT CAST(rn - 1 AS INT) AS cl, v AS cent FROM (
-            |   SELECT v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
-            |   WHERE rn <= (SELECT count(DISTINCT label) FROM e)""".stripMargin)},
-        |q AS (SELECT vec_id AS qid, v AS qv FROM (
-        |   SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
-        |   WHERE rn <= ${I.batch}),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
-        |$bfCteSql,
-        |${quantBlockSql("lab", "c", "assign", I.nProbe, I.shortlist)},
-        |${quantBlockSql("km", "kc", "kassign", I.nProbe, I.shortlist)}
-        |SELECT * FROM (
-        |${agg("kmeans", "km")}
-        |UNION ALL
-        |${agg("label", "lab")})
-        |ORDER BY quantizer""".stripMargin
-    },
+    "s_index_recall_quantizers_matched_s41" ->
+      indexRecallQuantizersSql(Some(41), matched = true),
     // residual-coded build census: the raw tree's cells joined to the
     // RESIDUAL code argmaxes — pins the subtraction, the residual
     // codebook and every code, cell by cell
     "s_index_build_residual" ->
       s"""WITH $annIndexCtesSql,
         |${annIndexResidCtesSql()},
-        |widr AS (
-        |  SELECT vec_id,
-        |    max(CASE WHEN m = 0 THEN code END) AS c0,
-        |    max(CASE WHEN m = 1 THEN code END) AS c1,
-        |    max(CASE WHEN m = 2 THEN code END) AS c2,
-        |    max(CASE WHEN m = 3 THEN code END) AS c3
-        |  FROM rcodes GROUP BY vec_id)
-        |SELECT CAST(a.cell AS BIGINT) AS cell, count(*) AS n_vecs,
-        |  min(a.vec_id) AS min_vec, max(a.vec_id) AS max_vec,
-        |  CAST(sum(c0 + c1 * 8 + c2 * 64 + c3 * 512) AS BIGINT) AS code_sum
-        |FROM assign a JOIN widr USING (vec_id)
-        |GROUP BY a.cell ORDER BY cell""".stripMargin,
+        |${cellCensusSql("assign", "rcodes")}""".stripMargin,
     // the coding A/B recall row: raw-coded and residual-coded
     // hierarchies over the SAME cells at the same probe budget against
     // one shared exact ground truth
-    "s_index_recall_residual" -> {
-      val I = graft.io.AnnIndex
-      val denom = I.batch * I.topK
-      def agg(tag: String, sfx: String): String =
-        s"""SELECT '$tag' AS coding,
-          |  CAST(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-          |  round(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) / $denom.0, 4) AS recall_at_5
-          |FROM idx$sfx i LEFT JOIN bf b ON b.qid = i.qid AND b.vec_id = i.vec_id"""
-          .stripMargin
-      s"""WITH $annIndexCtesSql,
-        |${annIndexResidCtesSql()},
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < ${I.batch}),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
-        |$bfCteSql,
-        |${quantBlockSql("raw", "c", "assign", I.nProbe, I.shortlist)},
-        |${residBlockSql("res", I.nProbe, I.shortlist)}
-        |SELECT * FROM (
-        |${agg("raw", "raw")}
-        |UNION ALL
-        |${agg("residual", "res")})
-        |ORDER BY coding""".stripMargin
-    },
+    "s_index_recall_residual" ->
+      indexRecallCodingSql(None, graft.io.AnnIndex.shortlist),
     // the coding A/B's stratum twin: stratified train block, residual
     // seeds = cbsel's dense relabel, 4-smallest-stratum-ids batch
-    "s_index_recall_residual_s41" -> {
-      val I = graft.io.AnnIndex
-      val denom = I.batch * I.topK
-      def agg(tag: String, sfx: String): String =
-        s"""SELECT '$tag' AS coding,
-          |  CAST(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-          |  round(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) / $denom.0, 4) AS recall_at_5
-          |FROM idx$sfx i LEFT JOIN bf b ON b.qid = i.qid AND b.vec_id = i.vec_id"""
-          .stripMargin
-      s"""WITH ${annIndexStratCtesSql(stratum41Sql("vec_id"))},
-        |${annIndexResidCtesSql("SELECT code, vec_id FROM cbsel")},
-        |q AS (SELECT vec_id AS qid, v AS qv FROM (
-        |   SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
-        |   WHERE rn <= ${I.batch}),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
-        |$bfCteSql,
-        |${quantBlockSql("raw", "c", "assign", I.nProbe, I.shortlist)},
-        |${residBlockSql("res", I.nProbe, I.shortlist)}
-        |SELECT * FROM (
-        |${agg("raw", "raw")}
-        |UNION ALL
-        |${agg("residual", "res")})
-        |ORDER BY coding""".stripMargin
-    },
+    "s_index_recall_residual_s41" ->
+      indexRecallCodingSql(Some(41), graft.io.AnnIndex.shortlist),
     // the ADC-only coding A/B: both hierarchies with refine depth =
     // topK, so the returned set is purely ADC-ranked
-    "s_index_recall_coding_adc" -> {
-      val I = graft.io.AnnIndex
-      val denom = I.batch * I.topK
-      def agg(tag: String, sfx: String): String =
-        s"""SELECT '$tag' AS coding,
-          |  CAST(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-          |  round(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) / $denom.0, 4) AS recall_at_5
-          |FROM idx$sfx i LEFT JOIN bf b ON b.qid = i.qid AND b.vec_id = i.vec_id"""
-          .stripMargin
-      s"""WITH $annIndexCtesSql,
-        |${annIndexResidCtesSql()},
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < ${I.batch}),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
-        |$bfCteSql,
-        |${quantBlockSql("rawa", "c", "assign", I.nProbe, I.topK)},
-        |${residBlockSql("resa", I.nProbe, I.topK)}
-        |SELECT * FROM (
-        |${agg("raw", "rawa")}
-        |UNION ALL
-        |${agg("residual", "resa")})
-        |ORDER BY coding""".stripMargin
-    },
+    "s_index_recall_coding_adc" ->
+      indexRecallCodingSql(None, graft.io.AnnIndex.topK),
     // the operating-point selector: the recall-curve and probe-cost
     // replays joined on nprobe, floored, smallest qualifying nprobe
     // first (max-recall fallback when nothing qualifies), LIMIT 1
     "s_index_nprobe_select" -> {
       val I = graft.io.AnnIndex
-      val denom = I.batch * I.topK
-      def curveAgg(np: Int): String =
-        s"""SELECT CAST($np AS BIGINT) AS nprobe,
-          |  CAST(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-          |  round(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) / $denom.0, 4) AS recall_at_5
-          |FROM idx$np i LEFT JOIN bf b ON b.qid = i.qid AND b.vec_id = i.vec_id"""
-          .stripMargin
       def costAgg(np: Int): String =
         s"""SELECT CAST($np AS BIGINT) AS nprobe,
           |  CAST(sum(n) AS BIGINT) AS n_scanned,
           |  round(sum(n) / (${I.batch}.0 * (SELECT count(*) FROM assign)), 4) AS frac_scanned
           |FROM ranked JOIN cc USING (cell) WHERE rn <= $np""".stripMargin
       s"""WITH $annIndexCtesSql,
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < ${I.batch}),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
+        |${queryPanelSql(None)},
         |$bfCteSql,
-        |${recallSweep.map { case (np, rk) =>
-            quantBlockSql(np.toString, "c", "assign", np, rk) }
-          .mkString(",\n")},
+        |${curveBlocks.mkString(",\n")},
         |ranked AS (
         |  SELECT q.qid, c.cell,
         |    row_number() OVER (PARTITION BY q.qid ORDER BY
@@ -3626,7 +3310,7 @@ object Similarity {
         |  FROM c, q),
         |cc AS (SELECT cell, count(*) AS n FROM assign GROUP BY cell),
         |curve AS (
-        |${recallSweep.map { case (np, _) => curveAgg(np) }
+        |${curveRows.map { case (t, sfx) => recallAggSql("nprobe", t, sfx) }
           .mkString("\nUNION ALL\n")}),
         |cost AS (
         |${recallSweep.map { case (np, _) => costAgg(np) }
@@ -3647,138 +3331,27 @@ object Similarity {
     // compete in the same per-qid shortlists
     "s_index_query_merged" ->
       s"""WITH $annIndexCtesSql,
-        |deltae AS (SELECT vec_id + 1000000 AS vec_id, list_reverse(v) AS v
-        |  FROM e WHERE vec_id % 7 = 3),
-        |dassign AS (
-        |  SELECT vec_id, any_value(v) AS v,
-        |         (max({'c': c2c, 'cell': cell})).cell AS cell
-        |  FROM (SELECT de.vec_id, de.v, c.cell,
-        |          round(list_dot_product(de.v, c.centroid) /
-        |            (sqrt(list_dot_product(de.v, de.v)) *
-        |             sqrt(list_dot_product(c.centroid, c.centroid))), 9) AS c2c
-        |        FROM deltae de, c) GROUP BY vec_id),
-        |dsubv AS (SELECT vec_id, m, v[m*16+1 : m*16+16] AS sv FROM deltae, ms),
-        |dcodes AS (
-        |  SELECT vec_id, dsubv.m,
-        |    (max({'d': round(list_dot_product(sv, cw), 9), 'code': code})).code AS code
-        |  FROM dsubv JOIN cb ON dsubv.m = cb.m GROUP BY vec_id, dsubv.m),
-        |mcodes AS MATERIALIZED (
-        |  SELECT vec_id, m, code FROM codes
-        |  UNION ALL SELECT vec_id, m, code FROM dcodes),
-        |massign AS MATERIALIZED (
-        |  SELECT vec_id, v, cell FROM assign
-        |  UNION ALL SELECT vec_id, v, cell FROM dassign),
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < ${graft.io.AnnIndex.batch}),
-        |probe AS (
-        |  SELECT qid, cell FROM (
-        |    SELECT q.qid, c.cell,
-        |      row_number() OVER (PARTITION BY q.qid ORDER BY
-        |        round(list_dot_product(c.centroid, q.qv) /
-        |          (sqrt(list_dot_product(c.centroid, c.centroid)) *
-        |           sqrt(list_dot_product(q.qv, q.qv))), 9) DESC, c.cell) AS rn
-        |    FROM c, q) WHERE rn <= 3),
-        |cand AS MATERIALIZED (
-        |  SELECT p.qid, a.vec_id, a.v FROM massign a JOIN probe p USING (cell)
-        |  WHERE a.vec_id <> p.qid),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
-        |adc0 AS (
-        |  SELECT cand.qid, cand.vec_id,
-        |    max(CASE WHEN mcodes.m = 0 THEN qd END) AS d0,
-        |    max(CASE WHEN mcodes.m = 1 THEN qd END) AS d1,
-        |    max(CASE WHEN mcodes.m = 2 THEN qd END) AS d2,
-        |    max(CASE WHEN mcodes.m = 3 THEN qd END) AS d3
-        |  FROM cand JOIN mcodes USING (vec_id)
-        |  JOIN qlut ON qlut.qid = cand.qid AND qlut.m = mcodes.m
-        |    AND qlut.code = mcodes.code
-        |  GROUP BY cand.qid, cand.vec_id),
-        |short AS (
-        |  SELECT qid, vec_id, round(d0 + d1 + d2 + d3, 4) AS adc FROM adc0
-        |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) <= 20),
-        |ref AS (
-        |  SELECT s.qid, s.vec_id,
-        |    round(list_dot_product(cand.v, q.qv) /
-        |      (sqrt(list_dot_product(cand.v, cand.v)) *
-        |       sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
-        |  FROM short s JOIN cand ON cand.qid = s.qid AND cand.vec_id = s.vec_id
-        |  JOIN q ON q.qid = s.qid)
-        |SELECT qid, CAST(row_number() OVER (PARTITION BY qid
-        |    ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk, vec_id, cos
-        |FROM ref
-        |QUALIFY rnk <= 5
-        |ORDER BY qid, rnk""".stripMargin,
+        |$annIndexDeltaMergedCtesSql,
+        |${queryPanelSql(None)},
+        |${annIndexMergedTailSql("")}""".stripMargin,
     // the stratum twins: the identical census / probe hierarchy over the
     // 1-in-41 draw (annIndexStratCtesSql), query batch = 4 smallest
     // stratum ids
     "s_index_build_s41" ->
-      s"""WITH ${annIndexStratCtesSql(stratum41Sql("vec_id"))},
-        |wide AS (
-        |  SELECT vec_id,
-        |    max(CASE WHEN m = 0 THEN code END) AS c0,
-        |    max(CASE WHEN m = 1 THEN code END) AS c1,
-        |    max(CASE WHEN m = 2 THEN code END) AS c2,
-        |    max(CASE WHEN m = 3 THEN code END) AS c3
-        |  FROM codes GROUP BY vec_id)
-        |SELECT CAST(a.cell AS BIGINT) AS cell, count(*) AS n_vecs,
-        |  min(a.vec_id) AS min_vec, max(a.vec_id) AS max_vec,
-        |  CAST(sum(c0 + c1 * 8 + c2 * 64 + c3 * 512) AS BIGINT) AS code_sum
-        |FROM assign a JOIN wide USING (vec_id)
-        |GROUP BY a.cell ORDER BY cell""".stripMargin,
+      s"""WITH ${trainCtesSql(Some(41))},
+        |${cellCensusSql("assign", "codes")}""".stripMargin,
     "s_index_query_s41" ->
-      s"""WITH ${annIndexStratCtesSql(stratum41Sql("vec_id"))},
-        |q AS (SELECT vec_id AS qid, v AS qv FROM (
-        |   SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
-        |   WHERE rn <= 4),
-        |probe AS (
-        |  SELECT qid, cell FROM (
-        |    SELECT q.qid, c.cell,
-        |      row_number() OVER (PARTITION BY q.qid ORDER BY
-        |        round(list_dot_product(c.centroid, q.qv) /
-        |          (sqrt(list_dot_product(c.centroid, c.centroid)) *
-        |           sqrt(list_dot_product(q.qv, q.qv))), 9) DESC, c.cell) AS rn
-        |    FROM c, q) WHERE rn <= 3),
-        |cand AS MATERIALIZED (
-        |  SELECT p.qid, a.vec_id, a.v FROM assign a JOIN probe p USING (cell)
-        |  WHERE a.vec_id <> p.qid),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
-        |adc0 AS (
-        |  SELECT cand.qid, cand.vec_id,
-        |    max(CASE WHEN codes.m = 0 THEN qd END) AS d0,
-        |    max(CASE WHEN codes.m = 1 THEN qd END) AS d1,
-        |    max(CASE WHEN codes.m = 2 THEN qd END) AS d2,
-        |    max(CASE WHEN codes.m = 3 THEN qd END) AS d3
-        |  FROM cand JOIN codes USING (vec_id)
-        |  JOIN qlut ON qlut.qid = cand.qid AND qlut.m = codes.m
-        |    AND qlut.code = codes.code
-        |  GROUP BY cand.qid, cand.vec_id),
-        |short AS (
-        |  SELECT qid, vec_id, round(d0 + d1 + d2 + d3, 4) AS adc FROM adc0
-        |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) <= 20),
-        |ref AS (
-        |  SELECT s.qid, s.vec_id,
-        |    round(list_dot_product(cand.v, q.qv) /
-        |      (sqrt(list_dot_product(cand.v, cand.v)) *
-        |       sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
-        |  FROM short s JOIN cand ON cand.qid = s.qid AND cand.vec_id = s.vec_id
-        |  JOIN q ON q.qid = s.qid)
-        |SELECT qid, CAST(row_number() OVER (PARTITION BY qid
-        |    ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk, vec_id, cos
-        |FROM ref
-        |QUALIFY rnk <= 5
-        |ORDER BY qid, rnk""".stripMargin,
+      s"""WITH ${trainCtesSql(Some(41))},
+        |${queryPanelSql(Some(41))},
+        |${annIndexQueryTailSql(selfExclude = true)}""".stripMargin,
     // the STRATUM twin of the segmented (base + delta) query: the
     // stratified train CTEs, the frozen-parameter delta replay over the
     // stratum's %7==3 subset, and the identical merged probe/ADC/refine
     // tail with the 4-smallest-stratum-ids query batch
     "s_index_query_merged_s41" ->
-      s"""WITH ${annIndexStratCtesSql(stratum41Sql("vec_id"))},
+      s"""WITH ${trainCtesSql(Some(41))},
         |$annIndexDeltaMergedCtesSql,
-        |q AS (SELECT vec_id AS qid, v AS qv FROM (
-        |   SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
-        |   WHERE rn <= 4),
+        |${queryPanelSql(Some(41))},
         |${annIndexMergedTailSql("")}""".stripMargin,
     // the delete census: live/dead split of the merged segments under the
     // vec_id % 11 == 5 tombstone batch, code checksum over LIVE rows only
@@ -3810,7 +3383,7 @@ object Similarity {
     "s_index_query_tombstoned" ->
       s"""WITH $annIndexCtesSql,
         |$annIndexDeltaMergedCtesSql,
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < ${graft.io.AnnIndex.batch}),
+        |${queryPanelSql(None)},
         |${annIndexMergedTailSql(" AND a.vec_id % 11 <> 5")}""".stripMargin,
     // the upsert replay: updated rows (%13==2, reversed, frozen-coded)
     // SUBSTITUTED into the merged views — stale base rows excluded by
@@ -3837,85 +3410,23 @@ object Similarity {
         |massign AS MATERIALIZED (
         |  SELECT vec_id, v, cell FROM assign WHERE vec_id % 13 <> 2
         |  UNION ALL SELECT vec_id, v, cell FROM uassign),
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < ${graft.io.AnnIndex.batch}),
+        |${queryPanelSql(None)},
         |${annIndexMergedTailSql("")}""".stripMargin,
     // recall census replay: the s_index_query hierarchy's top-5 vs the
     // exact brute-force top-5, intersected per qid — both rankings are
     // 4-dp + vec_id deterministic, so recall is an exact integer ratio
-    "s_index_recall" ->
-      s"""WITH $annIndexCtesSql,
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < ${graft.io.AnnIndex.batch}),
-        |probe AS (
-        |  SELECT qid, cell FROM (
-        |    SELECT q.qid, c.cell,
-        |      row_number() OVER (PARTITION BY q.qid ORDER BY
-        |        round(list_dot_product(c.centroid, q.qv) /
-        |          (sqrt(list_dot_product(c.centroid, c.centroid)) *
-        |           sqrt(list_dot_product(q.qv, q.qv))), 9) DESC, c.cell) AS rn
-        |    FROM c, q) WHERE rn <= 3),
-        |cand AS MATERIALIZED (
-        |  SELECT p.qid, a.vec_id, a.v FROM assign a JOIN probe p USING (cell)
-        |  WHERE a.vec_id <> p.qid),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
-        |adc0 AS (
-        |  SELECT cand.qid, cand.vec_id,
-        |    max(CASE WHEN codes.m = 0 THEN qd END) AS d0,
-        |    max(CASE WHEN codes.m = 1 THEN qd END) AS d1,
-        |    max(CASE WHEN codes.m = 2 THEN qd END) AS d2,
-        |    max(CASE WHEN codes.m = 3 THEN qd END) AS d3
-        |  FROM cand JOIN codes USING (vec_id)
-        |  JOIN qlut ON qlut.qid = cand.qid AND qlut.m = codes.m
-        |    AND qlut.code = codes.code
-        |  GROUP BY cand.qid, cand.vec_id),
-        |short AS (
-        |  SELECT qid, vec_id, round(d0 + d1 + d2 + d3, 4) AS adc FROM adc0
-        |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) <= 20),
-        |idx AS (
-        |  SELECT s.qid AS qid, s.vec_id AS vec_id,
-        |    round(list_dot_product(cand.v, q.qv) /
-        |      (sqrt(list_dot_product(cand.v, cand.v)) *
-        |       sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
-        |  FROM short s JOIN cand ON cand.qid = s.qid AND cand.vec_id = s.vec_id
-        |  JOIN q ON q.qid = s.qid
-        |  QUALIFY row_number() OVER (PARTITION BY s.qid ORDER BY cos DESC, s.vec_id) <= 5),
-        |bf AS (
-        |  SELECT qid, vec_id FROM (
-        |    SELECT q.qid, e.vec_id,
-        |      round(list_dot_product(e.v, q.qv) /
-        |        (sqrt(list_dot_product(e.v, e.v)) *
-        |         sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
-        |    FROM e, q WHERE e.vec_id <> q.qid)
-        |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) <= 5)
-        |SELECT i.qid AS qid,
-        |  CAST(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-        |  round(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) / 5.0, 4) AS recall_at_5
-        |FROM idx i LEFT JOIN bf b ON b.qid = i.qid AND b.vec_id = i.vec_id
-        |GROUP BY i.qid ORDER BY i.qid""".stripMargin,
+    "s_index_recall" -> indexRecallSql(None),
     // recall-vs-nprobe curve replay: one shared train block + ground
     // truth, the probe/ADC/shortlist/refine hierarchy instantiated per
     // sweep point (CTE names suffixed by nprobe), aggregated to one row
     // per nprobe
     "s_index_recall_curve" ->
-      s"""WITH $annIndexCtesSql,
-        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < ${graft.io.AnnIndex.batch}),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
-        |$recallCurveTailSql""".stripMargin,
+      recallSql(None, Nil, curveBlocks, "nprobe", curveRows),
     // the curve's STRATUM twin: the stratified hierarchy (same CTE
     // names) + the stratified query batch, then the identical per-np
     // sweep tail
     "s_index_recall_curve_s41" ->
-      s"""WITH ${annIndexStratCtesSql(stratum41Sql("vec_id"))},
-        |q AS (SELECT vec_id AS qid, v AS qv FROM (
-        |   SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
-        |   WHERE rn <= ${graft.io.AnnIndex.batch}),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
-        |$recallCurveTailSql""".stripMargin,
+      recallSql(Some(41), Nil, curveBlocks, "nprobe", curveRows),
     // probe-cost replay: the probe ranking over the train CTEs' assign
     // cell census, aggregated per sweep point
     "s_index_probe_cost" -> {
@@ -3983,59 +3494,7 @@ object Similarity {
     },
     // the stratum recall twin: the stratified hierarchy's top-5 vs
     // brute force over the same stratum, 4-smallest-ids batch
-    "s_index_recall_s41" ->
-      s"""WITH ${annIndexStratCtesSql(stratum41Sql("vec_id"))},
-        |q AS (SELECT vec_id AS qid, v AS qv FROM (
-        |   SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
-        |   WHERE rn <= 4),
-        |probe AS (
-        |  SELECT qid, cell FROM (
-        |    SELECT q.qid, c.cell,
-        |      row_number() OVER (PARTITION BY q.qid ORDER BY
-        |        round(list_dot_product(c.centroid, q.qv) /
-        |          (sqrt(list_dot_product(c.centroid, c.centroid)) *
-        |           sqrt(list_dot_product(q.qv, q.qv))), 9) DESC, c.cell) AS rn
-        |    FROM c, q) WHERE rn <= 3),
-        |cand AS MATERIALIZED (
-        |  SELECT p.qid, a.vec_id, a.v FROM assign a JOIN probe p USING (cell)
-        |  WHERE a.vec_id <> p.qid),
-        |qlut AS (SELECT qid, m, code,
-        |         round(list_dot_product(qv[m*16+1 : m*16+16], cw), 9) AS qd
-        |         FROM cb, q),
-        |adc0 AS (
-        |  SELECT cand.qid, cand.vec_id,
-        |    max(CASE WHEN codes.m = 0 THEN qd END) AS d0,
-        |    max(CASE WHEN codes.m = 1 THEN qd END) AS d1,
-        |    max(CASE WHEN codes.m = 2 THEN qd END) AS d2,
-        |    max(CASE WHEN codes.m = 3 THEN qd END) AS d3
-        |  FROM cand JOIN codes USING (vec_id)
-        |  JOIN qlut ON qlut.qid = cand.qid AND qlut.m = codes.m
-        |    AND qlut.code = codes.code
-        |  GROUP BY cand.qid, cand.vec_id),
-        |short AS (
-        |  SELECT qid, vec_id, round(d0 + d1 + d2 + d3, 4) AS adc FROM adc0
-        |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) <= 20),
-        |idx AS (
-        |  SELECT s.qid AS qid, s.vec_id AS vec_id,
-        |    round(list_dot_product(cand.v, q.qv) /
-        |      (sqrt(list_dot_product(cand.v, cand.v)) *
-        |       sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
-        |  FROM short s JOIN cand ON cand.qid = s.qid AND cand.vec_id = s.vec_id
-        |  JOIN q ON q.qid = s.qid
-        |  QUALIFY row_number() OVER (PARTITION BY s.qid ORDER BY cos DESC, s.vec_id) <= 5),
-        |bf AS (
-        |  SELECT qid, vec_id FROM (
-        |    SELECT q.qid, e.vec_id,
-        |      round(list_dot_product(e.v, q.qv) /
-        |        (sqrt(list_dot_product(e.v, e.v)) *
-        |         sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
-        |    FROM e, q WHERE e.vec_id <> q.qid)
-        |  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) <= 5)
-        |SELECT i.qid AS qid,
-        |  CAST(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-        |  round(sum(CASE WHEN b.vec_id IS NOT NULL THEN 1 ELSE 0 END) / 5.0, 4) AS recall_at_5
-        |FROM idx i LEFT JOIN bf b ON b.qid = i.qid AND b.vec_id = i.vec_id
-        |GROUP BY i.qid ORDER BY i.qid""".stripMargin,
+    "s_index_recall_s41" -> indexRecallSql(Some(41)),
     // the same augmentation in SQL — bit-identical index-order arithmetic
     // (the equivalence to the PLAIN inner-product top-10 is asserted
     // separately in SelfCheckSpec; the oracle pins the construction)

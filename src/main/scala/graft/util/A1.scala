@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions.{col, count, date_format, lit, max, min}
 import org.apache.spark.sql.types.DateType
 
 /** Spreadsheet A1-range math and date-range filenames (reference M4–M6,
-  * `utils.py:6-60`). Pure driver-side utilities; the only Spark actions are
-  * [[dfRange]]'s count and the single count/min/max aggregation behind
-  * [[makeDateFilename]].
+  * `utils.py:6-60`). Pure driver-side utilities; the only Spark action is
+  * the single count/min/max aggregation behind [[countAndDateFilename]]
+  * (and [[makeDateFilename]], which delegates to it).
   */
 object A1 {
 
@@ -67,13 +67,6 @@ object A1 {
       (colStart, rowStart, colEnd, rowEnd)
     case other => throw new IllegalArgumentException(s"malformed A1 range: $other")
   }
-
-  /** A1 range of a DataFrame — `df.shape` is a count() action (reference M4,
-    * `utils.py:38-41`); call once per sink, not per stage.
-    */
-  def dfRange(df: DataFrame, rangeMode: String = "full_range",
-      verticalOffset: Int = 0, horizontalOffset: Int = 0): String =
-    range(df.count(), df.columns.length, rangeMode, verticalOffset, horizontalOffset)
 
   /** `"{prefix}_{min}–{max}.csv"` (EN-DASH separator, ref `utils.py:26`) from
     * the FIRST DateType column; errors when none exists (`utils.py:17-21`).

@@ -7,18 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * dominates test wall-clock otherwise).
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // tz-naive parquet timestamps read as TIMESTAMP (UTC session) rather than
-    // TIMESTAMP_NTZ, matching the DuckDB oracle's naive-as-UTC epoch values
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(4)
 
   // env-overridable so the suites aren't coupled to this machine's layout
   private val testdataRoot =

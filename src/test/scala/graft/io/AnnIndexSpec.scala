@@ -425,20 +425,67 @@ class AnnIndexSpec extends SparkSpec with BeforeAndAfterAll {
       new java.io.File(root, "vectors_substituted"))
   }
 
-  test("recall census entry: one row per query, recall consistent with the floor") {
-    val rows = Similarity.queries("s_index_recall")(spark, sf).collect()
-    assert(rows.length == AnnIndex.batch)
-    rows.foreach { r =>
-      val nHit = r.getAs[Long]("n_hit")
-      // the same floor the brute-force test below asserts, as a value
-      assert(nHit >= 1L && nHit <= AnnIndex.topK)
-      assert(r.getAs[Double]("recall_at_5") == nHit / 5.0)
+  /** One recall ledger: its key column, the key values in row order, the
+    * recall denominator, and the least n_hit any row may have.
+    */
+  private case class Ledger(entry: String, key: String, keys: Seq[Any],
+      denom: Int, minHit: Long = 0L)
+
+  private lazy val ledgers: Seq[Ledger] = {
+    val pooled = AnnIndex.batch * AnnIndex.topK
+    val qids = (0L until AnnIndex.batch.toLong).toSeq
+    // the stratum twins' batch: the `batch` smallest stratum ids
+    val stratumQids = Tables.t(spark, sf, "embeddings")
+      .filter(Tables.stratum(col("vec_id"), 41))
+      .orderBy("vec_id").limit(AnnIndex.batch)
+      .collect().map(_.getAs[Long]("vec_id")).toSeq
+    val nprobes = Seq(3L, 5L, 10L)
+    val quantizers = Seq("kmeans", "label")
+    val codings = Seq("raw", "residual")
+    Seq(
+      // the per-qid census keeps the floor the brute-force test below
+      // asserts, as a value
+      Ledger("s_index_recall", "qid", qids, AnnIndex.topK, minHit = 1L),
+      Ledger("s_index_recall_s41", "qid", stratumQids, AnnIndex.topK),
+      Ledger("s_index_recall_curve", "nprobe", nprobes, pooled),
+      Ledger("s_index_recall_curve_s41", "nprobe", nprobes, pooled),
+      Ledger("s_index_recall_quantizers", "quantizer", quantizers, pooled),
+      Ledger("s_index_recall_quantizers_s41", "quantizer", quantizers, pooled),
+      Ledger("s_index_recall_quantizers_matched", "quantizer", quantizers,
+        pooled),
+      Ledger("s_index_recall_quantizers_matched_s41", "quantizer",
+        quantizers, pooled),
+      Ledger("s_index_recall_residual", "coding", codings, pooled),
+      Ledger("s_index_recall_residual_s41", "coding", codings, pooled),
+      Ledger("s_index_recall_coding_adc", "coding", codings, pooled))
+  }
+
+  test("recall ledgers: key rows in order, recall = n_hit / denominator") {
+    assert(ledgers.map(_.entry).toSet ==
+      Similarity.queries.keySet.filter(_.startsWith("s_index_recall")),
+      "every recall entry needs a row in the ledger table")
+    for (l <- ledgers) withClue(s"${l.entry}: ") {
+      val rows = Similarity.queries(l.entry)(spark, sf).collect()
+      assert(rows.map(_.getAs[Any](l.key)).toSeq == l.keys)
+      rows.foreach { r =>
+        val nHit = r.getAs[Long]("n_hit")
+        assert(nHit >= l.minHit && nHit <= l.denom.toLong)
+        assert(r.getAs[Double]("recall_at_5") == nHit / l.denom.toDouble)
+      }
     }
   }
 
+  test("every index entry, recall and census included, has a DuckDB oracle") {
+    // a twin dropped from the oracle map would otherwise fall back to the
+    // weaker rows-only check
+    val missing = Similarity.queries.keys.filter(_.startsWith("s_index_"))
+      .filterNot(Similarity.oracles.contains)
+    assert(missing.isEmpty, s"index entries without an oracle: $missing")
+  }
+
   test("recall curve entry: one row per nprobe, recall monotone non-decreasing") {
+    // key rows and the denominator: the ledger table above
     val rows = Similarity.queries("s_index_recall_curve")(spark, sf).collect()
-    assert(rows.map(_.getAs[Long]("nprobe")).toSeq == Seq(3L, 5L, 10L))
     val rec = rows.map(_.getAs[Double]("recall_at_5")).toSeq
     // larger probe sets are supersets of smaller ones, but with the
     // refine depth scaled to the probe budget monotonicity is NOT
@@ -458,10 +505,6 @@ class AnnIndexSpec extends SparkSpec with BeforeAndAfterAll {
     // rounds — so the exact values are assertable)
     assert(rec == Seq(0.45, 0.6, 0.85),
       s"recall curve moved off the pinned sf0.001 values: $rec")
-    rows.foreach { r =>
-      assert(r.getAs[Double]("recall_at_5") ==
-        r.getAs[Long]("n_hit") / (AnnIndex.batch * AnnIndex.topK).toDouble)
-    }
     // nprobe = 10 probes every cell at the testdata layouts, so the top
     // row is the refine ceiling — at least the 3-probe recall and > 0
     assert(rec.last >= rec.head && rec.last > 0.0)
@@ -570,42 +613,10 @@ class AnnIndexSpec extends SparkSpec with BeforeAndAfterAll {
     assert(new java.io.File(AnnIndex.rootFor(sf), "vectors").exists())
   }
 
-  test("quantizer A/B recall: one row per quantizer, shared denominator") {
-    val rows =
-      Similarity.queries("s_index_recall_quantizers")(spark, sf).collect()
-    assert(rows.map(_.getAs[String]("quantizer")).toSeq ==
-      Seq("kmeans", "label"))
-    rows.foreach { r =>
-      val nHit = r.getAs[Long]("n_hit")
-      assert(nHit >= 0L && nHit <= (AnnIndex.batch * AnnIndex.topK).toLong)
-      assert(r.getAs[Double]("recall_at_5") ==
-        nHit / (AnnIndex.batch * AnnIndex.topK).toDouble)
-    }
-  }
-
-  test("quantizer A/B stratum twin: same shape over the 1-in-41 trees") {
-    val rows =
-      Similarity.queries("s_index_recall_quantizers_s41")(spark, sf).collect()
-    assert(rows.map(_.getAs[String]("quantizer")).toSeq ==
-      Seq("kmeans", "label"))
-    rows.foreach { r =>
-      val nHit = r.getAs[Long]("n_hit")
-      assert(nHit >= 0L && nHit <= (AnnIndex.batch * AnnIndex.topK).toLong)
-    }
-  }
-
   test("matched-k quantizer A/B: trained cells = label cells, shared denominator") {
-    val rows =
-      Similarity.queries("s_index_recall_quantizers_matched")(spark, sf)
-        .collect()
-    assert(rows.map(_.getAs[String]("quantizer")).toSeq ==
-      Seq("kmeans", "label"))
-    rows.foreach { r =>
-      val nHit = r.getAs[Long]("n_hit")
-      assert(nHit >= 0L && nHit <= (AnnIndex.batch * AnnIndex.topK).toLong)
-      assert(r.getAs[Double]("recall_at_5") ==
-        nHit / (AnnIndex.batch * AnnIndex.topK).toDouble)
-    }
+    // key rows and the shared denominator: the ledger table above
+    Similarity.queries("s_index_recall_quantizers_matched")(spark, sf)
+      .collect()
     // the matched tree really trains as many cells as the corpus has
     // labels (empty Lloyd clusters may drop, so <=), unlike the 8-seed
     // km control
@@ -646,19 +657,6 @@ class AnnIndexSpec extends SparkSpec with BeforeAndAfterAll {
     assert(raw.join(res, "vec_id")
       .filter(col("r0") =!= col("c0")).count() > 0,
       "residual coding produced identical codes — the subtraction is dead")
-  }
-
-  test("residual A/B recall: one row per coding, shared denominator") {
-    val rows =
-      Similarity.queries("s_index_recall_residual")(spark, sf).collect()
-    assert(rows.map(_.getAs[String]("coding")).toSeq ==
-      Seq("raw", "residual"))
-    rows.foreach { r =>
-      val nHit = r.getAs[Long]("n_hit")
-      assert(nHit >= 0L && nHit <= (AnnIndex.batch * AnnIndex.topK).toLong)
-      assert(r.getAs[Double]("recall_at_5") ==
-        nHit / (AnnIndex.batch * AnnIndex.topK).toDouble)
-    }
   }
 
   test("external qid colliding with an indexed id fails loudly") {
